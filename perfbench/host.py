@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 import sys
 import tempfile
+import time
 
 # heap share of host RAM, clamped: local mode runs driver and executors in one
 # JVM, and the host is shared, so leave most of the RAM to everything else
@@ -45,12 +46,51 @@ def steal_s() -> float:
 
 
 def vm_hwm_mib(pid: int) -> float:
-    """Peak resident set (VmHWM) of a process."""
+    """Peak resident set (VmHWM) of a process; 0 for one that holds no
+    memory (a zombie)."""
     with open(f"/proc/{pid}/status") as f:
         for line in f:
             if line.startswith("VmHWM:"):
                 return int(line.split()[1]) / 1024
-    raise RuntimeError(f"VmHWM missing for pid {pid}")
+    return 0.0
+
+
+def reset_hwm(pid: int) -> None:
+    """Set a process's VmHWM back to its current resident set."""
+    with open(f"/proc/{pid}/clear_refs", "w") as f:
+        f.write("5")
+
+
+def descendants(pid: int) -> list[int]:
+    """Every live process below ``pid``, e.g. the JVM's Python workers and
+    the daemon that forks them."""
+    children: dict[int, list[int]] = {}
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/stat") as f:
+                ppid = int(f.read().rsplit(")", 1)[1].split()[1])
+        except OSError:  # exited meanwhile
+            continue
+        children.setdefault(ppid, []).append(int(d))
+    out, todo = [], list(children.get(pid, []))
+    while todo:
+        p = todo.pop()
+        out.append(p)
+        todo.extend(children.get(p, []))
+    return out
+
+
+def speed_probe() -> float:
+    """Seconds for a fixed single-threaded pure-Python loop: how fast the
+    host runs this process right now. Recorded next to the timings, so a
+    drift of the whole host shows apart from a change of the program."""
+    t = time.perf_counter()
+    acc = 0
+    for i in range(2_000_000):
+        acc = (acc + i * i) % 1_000_003
+    return time.perf_counter() - t
 
 
 def prepare_env(root: str, scratch: str, heap: int) -> None:
@@ -71,9 +111,9 @@ def prepare_env(root: str, scratch: str, heap: int) -> None:
     env["SPARK_LOCAL_DIRS"] = local
     env["SPARK_DRIVER_MEMORY"] = f"{heap}m"
     # a fixed-size, pre-touched heap: left to itself G1 grows and touches the
-    # heap as GC timing dictates, which moved the JVM's peak RSS by a fifth
-    # between identical runs; pre-touched, the peak RSS moves with the heap
-    # size and native memory only
+    # heap as GC timing dictates, which moved timings and the JVM's resident
+    # set between identical runs. The heap the program uses is read from the
+    # JVM's memory pools instead (see run.py, peak_mem_mb)
     env["PYSPARK_SUBMIT_ARGS"] = (
         f'--driver-java-options="-Xms{heap}m -XX:+AlwaysPreTouch" pyspark-shell'
     )

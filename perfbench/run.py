@@ -3,12 +3,14 @@
 inputs, one client and one job at a time, from reading the input to a fully
 materialized result.
 
-    python3 perfbench/run.py --workload near_dup --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload near_dup --seed 1 --seconds 10 --trace 0
     python3 perfbench/run.py --workload all      # every workload in BENCHMARK.json
 
 One run: generate the input from the seed; set up (Spark session sized from
 the host, JVM kernels, one untimed warm-up pass); then run the job back to
-back for ``--seconds``, checking every output against the workload's oracle.
+back for ``--seconds``, checking every output against the workload's oracle;
+when the host stole more than STEAL_LIMIT of every job's CPU time, one more
+job runs.
 With ``--trace 1`` a traced job and one more untraced job follow, and the
 per-layer metrics replace the end-to-end ones. The last stdout line is the result:
 {"correct", "attempted", "failed", "metrics"}. The run record (host, heap,
@@ -39,7 +41,7 @@ END_TO_END = {
     "records_per_s": "records/s",
     "recall": "ratio",
     "precision": "ratio",
-    "peak_rss_mb": "MiB",
+    "peak_mem_mb": "MiB",
 }
 LAYER_COUNTERS = {
     "self_s": "s", "rows_out": "count", "jobs": "count", "cpu_s": "s",
@@ -54,6 +56,10 @@ LAYER_EXTRAS = {
     "estimation.iterations": "count",
     "similarity.pairs_out": "count",
 }
+# a job during which the hypervisor stole more than this share of the vCPU
+# time is disturbed; when every job of the window was, the window runs one
+# more, and wall_s is the median of the undisturbed jobs where there are any
+STEAL_LIMIT = 0.05
 TRACE_TOTALS = {
     "trace.total_s": "s",  # the traced job
     "trace.overhead_s": "s",  # traced total minus the untraced jobs around it
@@ -83,6 +89,83 @@ def _process_start() -> float:
 
 def _log(msg: str) -> None:
     print(msg, file=sys.stderr, flush=True)
+
+
+def _memory_probe(spark):
+    """Start measuring the memory the job uses; returns a function that
+    stops and gives (peak_mem_mb, its parts).
+
+    The heap is fixed and pre-touched, so the JVM's resident set holds all
+    of it whatever the job does. The heap part is therefore the peak use of
+    the heap pools other than eden: eden is the young generation's
+    allocation buffer, which the collector sizes to its pause goal and
+    empties at every young collection, so its peak follows the GC policy,
+    not the data the program holds. Added to that: the JVM's resident
+    memory outside the heap (VmHWM minus the committed heap), and the
+    resident memory of this Python driver and of the JVM's Python workers.
+    Every peak is reset when the window starts."""
+    from perfbench import host
+
+    jvm = spark._jvm  # noqa: SLF001
+    mf = jvm.java.lang.management.ManagementFactory
+    pools = [
+        p for p in mf.getMemoryPoolMXBeans()
+        if p.getType().name() == "HEAP" and "Eden" not in p.getName()
+    ]
+    jvm_pid = jvm.ProcessHandle.current().pid()
+    for p in pools:
+        p.resetPeakUsage()
+    for pid in [os.getpid(), jvm_pid, *host.descendants(jvm_pid)]:
+        try:
+            host.reset_hwm(pid)
+        except OSError:  # exited meanwhile
+            pass
+
+    def stop() -> tuple[float, dict]:
+        heap = sum(p.getPeakUsage().getUsed() for p in pools) / 2**20
+        committed = mf.getMemoryMXBean().getHeapMemoryUsage().getCommitted() / 2**20
+        native = host.vm_hwm_mib(jvm_pid) - committed
+        python = host.vm_hwm_mib(os.getpid())
+        for pid in host.descendants(jvm_pid):
+            try:
+                python += host.vm_hwm_mib(pid)
+            except OSError:  # exited meanwhile
+                pass
+        parts = {"mem_heap_mb": heap, "mem_jvm_native_mb": native, "mem_python_mb": python}
+        return heap + native + python, parts
+
+    return stop
+
+
+def timed_window(job, seconds: float, cores: int, steal_s, clock=time.perf_counter):
+    """The closed loop: run ``job`` while the next run still fits in
+    ``seconds``, and at least once. When the host stole more than
+    STEAL_LIMIT of every timed job's vCPU time, run one more. ``job``
+    returns (wall seconds, ...) or None if it failed. Returns the walls and
+    each one's steal share."""
+    walls: list[float] = []
+    stolen: list[float] = []
+    attempted, retried = 0, False
+    t0 = clock()
+    while True:
+        steal = steal_s()
+        done = job()
+        attempted += 1
+        if done:
+            walls.append(done[0])
+            stolen.append((steal_s() - steal) / (done[0] * cores))
+        elapsed = clock() - t0
+        if elapsed + elapsed / attempted <= seconds:
+            continue
+        if not retried and stolen and min(stolen) > STEAL_LIMIT:
+            retried = True
+            continue
+        return walls, stolen
+
+
+def window_wall(walls: list[float], stolen: list[float]) -> float:
+    """Median of the undisturbed jobs, or of all jobs if none is."""
+    return statistics.median([w for w, x in zip(walls, stolen) if x <= STEAL_LIMIT] or walls)
 
 
 def _release(spark, workdir: str) -> None:
@@ -139,7 +222,7 @@ def run(args, run_id: str, scratch: str) -> tuple[dict, dict]:
         "python": platform.python_version(), "gen_s": gen_s,
     }
     steal0 = host.steal_s()
-    walls, checks = [], []
+    checks = []
     attempted = 0
     spark = get_spark("perfbench", cpus=cpus)
     try:
@@ -147,7 +230,9 @@ def run(args, run_id: str, scratch: str) -> tuple[dict, dict]:
         record["jdk"] = spark._jvm.System.getProperty("java.version")  # noqa: SLF001
         record["jvm_kernels"] = ensure_jvm_udfs(spark)
         workdir = os.path.join(scratch, "work")
+        t = time.perf_counter()
         wl.iterate(spark, NullTracer(), workdir)  # warm-up
+        record["warmup_s"] = time.perf_counter() - t
         _release(spark, workdir)
         setup_s = time.perf_counter() - _process_start() - gen_s
         steal1 = host.steal_s()
@@ -169,16 +254,12 @@ def run(args, run_id: str, scratch: str) -> tuple[dict, dict]:
             finally:
                 _release(spark, workdir)
 
-        # closed loop: start another job only while it fits in the window
-        t_window = time.perf_counter()
-        while True:
-            done = job(NullTracer())
-            if done:
-                walls.append(done[0])
-            elapsed = time.perf_counter() - t_window
-            if elapsed + elapsed / attempted > args.seconds:
-                break
+        memory = _memory_probe(spark)
+        walls, stolen = timed_window(lambda: job(NullTracer()), args.seconds, cpus, host.steal_s)
         steal2 = host.steal_s()
+        peak_mem, mem_parts = memory()
+        record.update(mem_parts)
+        record["probe_s"] = statistics.median(host.speed_probe() for _ in range(3))
 
         layers = None
         if args.trace and walls:
@@ -196,8 +277,6 @@ def run(args, run_id: str, scratch: str) -> tuple[dict, dict]:
                 os.makedirs(os.path.join(OUT_DIR, "spans"), exist_ok=True)
                 with open(os.path.join(OUT_DIR, "spans", run_id + ".json"), "w") as f:
                     json.dump(tracer.to_json(), f)
-        jvm_pid = spark._jvm.ProcessHandle.current().pid()  # noqa: SLF001
-        peak_rss = host.vm_hwm_mib(jvm_pid)
     finally:
         _stop_spark(spark)
 
@@ -205,17 +284,17 @@ def run(args, run_id: str, scratch: str) -> tuple[dict, dict]:
     correct = failed == 0 and all(ok for _, _, ok in checks)
     record.update(
         setup_s=setup_s, walls=walls, checks=checks, attempted=attempted, failed=failed,
-        fail_frac=failed / attempted, correct=correct, peak_rss_mb=peak_rss,
-        steal_setup_s=steal1 - steal0, steal_window_s=steal2 - steal1,
+        fail_frac=failed / attempted, correct=correct, peak_mem_mb=peak_mem,
+        steal_setup_s=steal1 - steal0, steal_window_s=steal2 - steal1, steal_shares=stolen,
     )
     metrics: dict[str, float] = {}
     if walls:
-        wall = statistics.median(walls)
+        wall = window_wall(walls, stolen)
         recall = min(c[0] for c in checks)
         precision = min(c[1] for c in checks)
         values = {
             "setup_s": setup_s, "wall_s": wall, "records_per_s": wl.records / wall,
-            "recall": recall, "precision": precision, "peak_rss_mb": peak_rss,
+            "recall": recall, "precision": precision, "peak_mem_mb": peak_mem,
         }
         units = END_TO_END
         if layers is not None:

@@ -9,6 +9,7 @@ import os
 import shutil
 import subprocess
 import sys
+import time
 
 import numpy as np
 import pytest
@@ -200,14 +201,6 @@ def test_voters_linkage_check_against_ncid_truth():
     assert (r, p, ok) == (1.0, 0.5, False)
 
 
-def test_voters_dedup_check_against_ncid_truth():
-    wl = workloads.VotersDedup(2)
-    wl.ncid = ["e0", "e1", "e9", "e0", "e1", "e8"]  # rows 0-2 side A, 3-5 side B
-    wl.n_shared = 2
-    assert wl.check([(3, 0), (4, 1)]) == (1.0, 1.0, True)
-    assert wl.check([(3, 0), (5, 2)]) == (0.5, 0.5, False)
-
-
 def test_embeddings_check_requires_exact_precision():
     wl = workloads.EmbeddingsNearDup(3)
     wl.oracle = {(1, 0), (2, 1)}
@@ -227,15 +220,63 @@ def test_near_dup_check_needs_every_part():
 
 def test_pages_oracle_assumption_holds_by_brute_force():
     """No pair across planted groups reaches the Jaccard threshold, so the
-    within-group oracle is the full answer (checked at n=3000)."""
+    within-group oracle is the full answer (checked at the benchmark's
+    size)."""
     from fixtures.synth import pages
 
-    rows, _, root_of = pages(n=3000, seed=42)
+    rows, _, root_of = pages(n=workloads.PAGES_N, seed=42)
     texts = [r["text"] for r in rows]
     group_of = [root_of[i] for i in range(len(rows))]
     within = oracles.pages_oracle_pairs(texts, group_of)
     assert len(within) > 500
     assert oracles.brute_force_jaccard_pairs(texts) == within
+
+
+# ------------------------------------------------------------ the window
+def _fake_window(shares, seconds=5.0, cores=2):
+    """Jobs of 10 s each; the host steals ``shares[i]`` of job i's vCPU time."""
+    from perfbench.run import timed_window
+
+    now, steal, todo = [0.0], [0.0], iter(shares)
+
+    def job():
+        share = next(todo)
+        now[0] += 10.0
+        steal[0] += share * 10.0 * cores
+        return (10.0,)
+
+    return timed_window(job, seconds, cores, lambda: steal[0], clock=lambda: now[0])
+
+
+def test_window_times_one_more_job_only_when_every_job_was_disturbed():
+    from perfbench.run import STEAL_LIMIT, window_wall
+
+    calm, hit = STEAL_LIMIT / 2, STEAL_LIMIT * 2
+    walls, stolen = _fake_window([calm])
+    assert walls == [10.0]
+    assert stolen == pytest.approx([calm])
+    assert len(_fake_window([hit, calm])[0]) == 2
+    assert len(_fake_window([hit, hit, calm])[0]) == 2  # one more job at most
+    assert window_wall([20.0, 12.0], [hit, calm]) == 12.0
+    assert window_wall([20.0, 22.0], [hit, hit]) == 21.0
+
+
+# ------------------------------------------------------------ host facts
+def test_descendants_and_peak_resident_set_of_a_child():
+    from perfbench import host
+
+    child = subprocess.Popen(
+        [sys.executable, "-c", "import sys; b = bytearray(64 << 20); sys.stdin.read()"],
+        stdin=subprocess.PIPE,
+    )
+    try:
+        deadline = time.monotonic() + 30
+        while host.vm_hwm_mib(child.pid) < 64 and time.monotonic() < deadline:
+            time.sleep(0.05)
+        assert child.pid in host.descendants(os.getpid())
+        assert host.vm_hwm_mib(child.pid) >= 64
+    finally:
+        child.communicate(b"")
 
 
 # ---------------------------------------------------------------- the CLI
@@ -273,5 +314,22 @@ def test_spark_counters_attribute_a_real_job():
         assert layers["inner"]["cpu_s"] > 0
         assert layers["inner"]["shuffle_mb"] > 0
         assert layers["outer"]["jobs"] >= 1
+    finally:
+        spark.stop()
+
+
+def test_memory_probe_adds_up_its_parts():
+    pytest.importorskip("pyspark")
+    from fast_er_spark.session import get_spark
+    from perfbench.run import _memory_probe
+
+    spark = get_spark("perfbench-test", cpus=2, shuffle_partitions=2)
+    try:
+        stop = _memory_probe(spark)
+        spark.range(200_000).selectExpr("id % 13 AS k").groupBy("k").count().collect()
+        total, parts = stop()
+        assert set(parts) == {"mem_heap_mb", "mem_jvm_native_mb", "mem_python_mb"}
+        assert all(v > 0 for v in parts.values())
+        assert total == pytest.approx(sum(parts.values()))
     finally:
         spark.stop()

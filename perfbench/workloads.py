@@ -210,52 +210,6 @@ def _linkage_counters(counts, est, n_out: int) -> dict:
     }
 
 
-class VotersDedup(Workload):
-    name = "voters_dedup"
-    min_recall = 0.95
-    min_precision = 0.95
-
-    def generate(self, seed, indir):
-        from fixtures.synth import voters
-
-        rows_a, rows_b = voters(n=self.n, overlap=0.5, seed=seed)
-        rows = rows_a + rows_b
-        for i, r in enumerate(rows):
-            r["rid"] = i
-        self.path = _write(pa.Table.from_pylist(rows), os.path.join(indir, "voters.parquet"))
-        self.ncid = [r["ncid"] for r in rows]
-        self.n_shared = len({r["ncid"] for r in rows_a} & {r["ncid"] for r in rows_b})
-        self.records = len(rows)
-
-    def iterate(self, spark, tracer, workdir):
-        from pyspark.sql import functions as F
-
-        from fast_er_spark import Deduplication, Estimation
-
-        df = spark.read.parquet(self.path)
-        with tracer.span("comparison_fit"):
-            dd = Deduplication(df, VOTER_FUZZY, VOTER_EXACT, id_col="rid").fit()
-        with tracer.span("counts"):
-            counts = dd.counts()
-        with tracer.span("estimation"):
-            est = Estimation(len(VOTER_FUZZY), len(VOTER_EXACT), counts, seed=13).fit()
-        with tracer.span("transform"):
-            # Linkage needs a two-sided comparison, so the admitted patterns
-            # are selected from the pattern frame directly
-            admitted = [i for i, v in enumerate(est.ksi) if v >= POSTERIOR and i != 0]
-            pairs = [
-                (r["id_a"], r["id_b"])
-                for r in dd.patterns.where(F.col("pattern_id").isin(admitted))
-                .select("id_a", "id_b")
-                .collect()
-            ]
-        return pairs, _linkage_counters(counts, est, len(pairs))
-
-    def recall_precision(self, pairs):
-        n_true = sum(1 for i, j in pairs if self.ncid[i] == self.ncid[j])
-        return oracles.linkage_recall_precision(len(pairs), n_true, self.n_shared)
-
-
 class EmbeddingsNearDup(Workload):
     name = "embeddings_near_dup"
     dim = 64
@@ -297,7 +251,9 @@ class EmbeddingsNearDup(Workload):
 
 class NearDup(Workload):
     """Its parts back to back as one job: text near-dups over a page corpus,
-    then semantic near-dups over an embedding table."""
+    then semantic near-dups over an embedding table. Its records are the
+    parts' records summed (docs + vectors), and its recall and precision
+    are the lower of the parts'."""
 
     name = "near_dup"
 
@@ -323,15 +279,15 @@ class NearDup(Workload):
         return min(c[0] for c in checks), min(c[1] for c in checks), all(c[2] for c in checks)
 
 
-# input sizes chosen so one job takes seconds on a 4-core host (records:
-# docs, rows per side, rows, vectors); voters at 10k per side put the pair
-# space at _SPILL_PAIR_SPACE, where linkage takes its big-input engine
+# input sizes chosen so one job takes seconds on a 4-core host; voters at
+# 10k per side put the pair space at _SPILL_PAIR_SPACE, where linkage takes
+# its big-input engine
+PAGES_N = 5000
+VECTORS_N = 3000
+VOTERS_PER_SIDE = 10_000
 WORKLOADS = {
-    "near_dup": lambda: NearDup(PagesDedup(3000), EmbeddingsNearDup(4000)),
-    "voters_linkage": lambda: VotersLinkage(10_000),
-    "pages_dedup": lambda: PagesDedup(3000),
-    "embeddings_near_dup": lambda: EmbeddingsNearDup(4000),
-    "voters_dedup": lambda: VotersDedup(10_000),
+    "near_dup": lambda: NearDup(PagesDedup(PAGES_N), EmbeddingsNearDup(VECTORS_N)),
+    "voters_linkage": lambda: VotersLinkage(VOTERS_PER_SIDE),
 }
 
 
