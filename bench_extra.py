@@ -2,7 +2,8 @@
 """Extra benchmarks for the optimization rounds (bench.py is FROZEN for
 measurement — this file is where new instrumentation lives).
 
-Mirrors bench.py's session, warmup and per-query rigs exactly, then:
+Uses bench.py's headline query list and steal counter, mirrors its
+session, warmup and per-query rigs, then:
   - runs each requested query ``--repeats`` times (noop sink, guide §1.4)
     and reports min/median per query;
   - with ``--jobs``, enables the Spark UI and dumps the per-JOB wall
@@ -27,37 +28,8 @@ import urllib.request
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod  # noqa: E402
+from bench import HEADLINE, _steal_ticks  # noqa: E402
 from fast_er_spark.session import get_spark  # noqa: E402
-
-HEADLINE = [
-    "minhash_lsh_dedup",
-    "cc_clusters",
-    "token_jaccard_pairs",
-    "exact_dedup_pairs",
-    "substring_anchor_pairs",
-    "fs_pattern_counts",
-    "fuzzy_jw_supplier",
-    "linkage_transform",
-    "tokenstats",
-    "doc_fingerprint",
-    "lang_id",
-    "embedding_topk",
-    "embedding_near_dup_lsh",
-    "curation_pipeline",
-    "events_hourly",
-    "tpch_q1",
-    "top_customers",
-    "orders_running_sum",
-]
-
-
-def _steal_ticks() -> int | None:
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        return int(parts[8])
-    except Exception:
-        return None
 
 
 def _jobs_since(spark, first_job_id: int):

@@ -31,7 +31,6 @@ __all__ = [
     "ensure_jvm_udfs",
     "oph_signature_jvm",
     "sig_and_shingles_jvm",
-    "jw_level_jvm",
     "jw_level_jvm_bin",
     "char_mask_jvm",
     "shingle_hashes_jvm",
@@ -54,7 +53,6 @@ _SRCS = [
 _UDF_NAME = "fast_er_oph_signature"
 _SIG_SH_UDF_NAME = "fast_er_sig_and_shingles"
 _INTER_UNION_UDF_NAME = "fast_er_sorted_inter_union"
-_JW_UDF_NAME = "fast_er_jw_level"
 _JW_BIN_UDF_NAME = "fast_er_jw_level_bin"
 _CHAR_MASK_UDF_NAME = "fast_er_char_mask"
 _SHINGLE_UDF_NAME = "fast_er_shingle_hashes"
@@ -152,7 +150,6 @@ def ensure_jvm_udfs(spark: SparkSession) -> bool:
         spark.udf.registerJavaFunction(
             _UDF_NAME, "FastErUdfs", T.ArrayType(T.LongType())
         )
-        spark.udf.registerJavaFunction(_JW_UDF_NAME, "JwUdfs", T.IntegerType())
         spark.udf.registerJavaFunction(_JW_BIN_UDF_NAME, "JwUdfs$Bin", T.IntegerType())
         spark.udf.registerJavaFunction(
             _CHAR_MASK_UDF_NAME, "JwUdfs$CharMask", T.LongType()
@@ -319,20 +316,6 @@ def ngram_lang_id_jvm(text_col, spec: str) -> Column:
     return F.call_udf(_NGRAM_LANG_UDF_NAME, col, F.lit(spec))
 
 
-def jw_level_jvm(val_a, val_b, p: float, lower: float, upper: float) -> Column:
-    """Banded Jaro-Winkler level (0/1/2) computed in the executor JVM with
-    byte-exact reference semantics (see jvm/JwUdfs.java — the float
-    operation order mirrors functions.jw.jaro_winkler_bytes, so levels can
-    never disagree with the Python kernels). The caller must have run
-    ensure_jvm_udfs(spark) first."""
-    a = F.col(val_a) if isinstance(val_a, str) else val_a
-    b = F.col(val_b) if isinstance(val_b, str) else val_b
-    return F.call_udf(
-        _JW_UDF_NAME, a, b,
-        F.lit(float(p)), F.lit(float(lower)), F.lit(float(upper)),
-    )
-
-
 def char_mask_jvm(col) -> Column:
     """64-bit char-multiset sketch of a BINARY column (jvm/JwUdfs.java::
     CharMask) — pass ``F.col(c).cast("binary")`` of a string column. Used
@@ -344,12 +327,14 @@ def char_mask_jvm(col) -> Column:
 
 
 def jw_level_jvm_bin(val_a, val_b, p: float, lower: float, upper: float) -> Column:
-    """Banded JW level over BINARY columns (jvm/JwUdfs.java::Bin) — same
-    byte-exact kernel as jw_level_jvm, but BinaryType crosses the Java-UDF
-    bridge as byte[] directly, skipping the per-call UTF-16 decode +
-    UTF-8 re-encode the String signature pays. Pass ``col.cast("binary")``
-    of a string column (Spark's string->binary cast IS the UTF-8 bytes).
-    The caller must have run ensure_jvm_udfs(spark) first."""
+    """Banded Jaro-Winkler level (0/1/2) over BINARY columns, computed in
+    the executor JVM with byte-exact reference semantics (jvm/JwUdfs.java::
+    Bin — the float operation order mirrors functions.jw.jaro_winkler_bytes,
+    so levels can never disagree with the Python kernels). BinaryType
+    crosses the Java-UDF bridge as byte[] with no transcoding. Pass
+    ``col.cast("binary")`` of a string column (Spark's string->binary cast
+    IS the UTF-8 bytes). The caller must have run ensure_jvm_udfs(spark)
+    first."""
     a = F.col(val_a) if isinstance(val_a, str) else val_a
     b = F.col(val_b) if isinstance(val_b, str) else val_b
     return F.call_udf(

@@ -16,11 +16,10 @@
  * batch path.
  */
 
-import java.nio.charset.StandardCharsets;
 import org.apache.spark.sql.api.java.UDF1;
 import org.apache.spark.sql.api.java.UDF5;
 
-public class JwUdfs implements UDF5<String, String, Double, Double, Double, Integer> {
+public class JwUdfs {
 
     public static double jaroWinkler(byte[] s1, byte[] s2, double p) {
         int l1 = s1.length, l2 = s2.length;
@@ -116,13 +115,11 @@ public class JwUdfs implements UDF5<String, String, Double, Double, Double, Inte
     }
 
     /**
-     * byte[]-native variant for the candidate-scoring hot path: Spark's
-     * Java-UDF bridge hands BinaryType through as byte[] with no
-     * conversion, where the String form pays UTF8String -> String (UTF-16
-     * decode) in the bridge plus getBytes (UTF-8 re-encode) per call —
-     * two transcodes and two allocations per scored pair. Callers cast
-     * the value columns to binary (Spark's string->binary cast IS the
-     * UTF-8 bytes, same as Python .encode()), so levels are unchanged.
+     * Banded level over byte[]: Spark's Java-UDF bridge hands BinaryType
+     * through as byte[] with no conversion (a String signature would pay a
+     * UTF-16 decode in the bridge plus a UTF-8 re-encode per call).
+     * Callers cast the value columns to binary (Spark's string->binary
+     * cast IS the UTF-8 bytes, same as Python .encode()).
      */
     public static class Bin implements UDF5<byte[], byte[], Double, Double, Double, Integer> {
         @Override
@@ -164,20 +161,5 @@ public class JwUdfs implements UDF5<String, String, Double, Double, Double, Inte
         public Long call(byte[] s) {
             return s == null ? 0L : charMask(s);
         }
-    }
-
-    public static int level(String a, String b, double p, double lower, double upper) {
-        if (a == null || b == null) return 0;
-        double s = jaroWinkler(
-            a.getBytes(StandardCharsets.UTF_8),
-            b.getBytes(StandardCharsets.UTF_8), p);
-        if (s >= upper) return 2;
-        if (s >= lower) return 1;
-        return 0;
-    }
-
-    @Override
-    public Integer call(String a, String b, Double p, Double lower, Double upper) {
-        return level(a, b, p, lower, upper);
     }
 }

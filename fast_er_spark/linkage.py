@@ -32,6 +32,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ._env import flag_off
 from .estimation import Estimation
 from .operators.agreement import (
     assemble_patterns,
@@ -156,10 +157,6 @@ def _single_long_bits(n_a, n_b, st, k_fuzzy: int, k_exact: int):
     the row counts (0..n-1); the max per-edge contribution is level 2 on
     the largest-stride fuzzy variable; the max pattern id is
     n_patterns - 1."""
-    import os
-
-    if os.environ.get("FAST_ER_PACK1", "1") == "0":  # A/B escape hatch
-        return None
     if n_a is None or n_b is None or k_fuzzy < 1:
         return None
     ba = max(1, (int(n_a) - 1).bit_length())
@@ -228,10 +225,6 @@ def _materialize_pairs(
     STORAGE — HDFS/S3 — on a real cluster: executors write the files
     directly); default is a driver-local temp dir, which is correct in
     local mode, and is removed at interpreter exit."""
-    import os
-
-    if os.environ.get("FAST_ER_NO_SPILL"):  # A/B escape hatch (bench only)
-        big = False
     if not big:
         return df.persist()
     spark = df.sparkSession
@@ -244,22 +237,9 @@ def _materialize_pairs(
     else:
         path = tempfile.mkdtemp(prefix="fast_er_pairs_")
         _spill_dirs.append(path)
-    # spill codec override (A/B hatch; e.g. lz4 or uncompressed trade disk
-    # bytes for encode/decode CPU — keep the session default on shared
-    # storage, where spilled bytes cross the network)
-    codec = os.environ.get("FAST_ER_SPILL_CODEC")
-
-    def _write(frame: DataFrame) -> None:
-        w = frame.write.mode("overwrite")
-        if codec:
-            w = w.option("compression", codec)
-        w.parquet(path)
-
-    if (
-        pack_bits is not None
-        and df.columns == ["id_a", "id_b", "pattern_id"]
-        and os.environ.get("FAST_ER_PACK_SPILL", "1") != "0"
-    ):
+    # the codec is spark.sql.parquet.compression.codec: every codec measured
+    # off the critical path (PERF.md round 5 #14)
+    if pack_bits is not None and df.columns == ["id_a", "id_b", "pattern_id"]:
         ba, bb, bp = pack_bits
         if ba + bb + bp <= 63:
             packed = df.select(
@@ -268,7 +248,7 @@ def _materialize_pairs(
                 .bitwiseOR(F.col("pattern_id"))
                 .alias("__pk")
             )
-            _write(packed)
+            packed.write.mode("overwrite").parquet(path)
             return spark.read.parquet(path).select(
                 F.shiftrightunsigned(F.col("__pk"), bb + bp).alias("id_a"),
                 F.shiftrightunsigned(F.col("__pk"), bp)
@@ -276,7 +256,7 @@ def _materialize_pairs(
                 .alias("id_b"),
                 F.col("__pk").bitwiseAND(F.lit((1 << bp) - 1)).alias("pattern_id"),
             )
-    _write(df)
+    df.write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
 
 
@@ -344,8 +324,6 @@ def _sparse_fuzzy_union(
     u = contribs[0]
     for c in contribs[1:]:
         u = u.unionByName(c)
-    import os
-
     # explicit hash repartition on the agg key BEFORE the groupBy: the
     # partial aggregate then runs AFTER the exchange on co-located data
     # instead of inside the (CPU-bound, 232-task) JW stage, where it hashed
@@ -357,22 +335,11 @@ def _sparse_fuzzy_union(
     # numbered repartition pins the session partition count onto what may
     # be a tiny edge set, and small fits pay pure scheduling overhead for
     # it (fs_pattern_counts +80% at sf0.1 before the gate — the round-1
-    # small-input lesson again). FAST_ER_PREPARTITION=0 force-disables.
-    if prepartition and os.environ.get("FAST_ER_PREPARTITION", "1") != "0":
+    # small-input lesson again).
+    if prepartition:
+        # one bucket per shuffle partition: over-partitioning measured
+        # slower end to end (PERF.md round 5 #15)
         sp = int(u.sparkSession.conf.get("spark.sql.shuffle.partitions", "64"))
-        # NEGATIVE RESULT (round 5, keep factor 1): over-partitioning this
-        # exchange (factor 16 -> 1024 tasks at 100k x 100k) looked like a
-        # win in an isolated exchange+agg microbench (smaller per-task agg
-        # hash maps: 5.5-6.5 s vs 7-8 s), but the FULL pipeline measured it
-        # 4-7 s SLOWER (interleaved A/B: counts phase 31.3-33.9 s at
-        # factor 16 vs 26.1-26.8 s at factor 1, the latter under heavier
-        # steal): 16x reduce buckets inflate the map-side shuffle write of
-        # the CPU-bound JW stage (939 MB vs 850 MB + per-bucket stream
-        # overhead) and fragment the spill parquet into 1024 files. The
-        # microbench's persisted input had a trivial map side, which is
-        # exactly where the real cost landed.
-        factor = int(os.environ.get("FAST_ER_ASSEMBLY_PARTITION_FACTOR", "1"))
-        sp = min(sp * max(1, factor), 4096)
         if pack_bits is not None:
             u = u.repartition(sp, F.shiftrightunsigned(F.col("__e"), pack_bits[2]))
         else:
@@ -471,10 +438,11 @@ class Comparison:
         materialized pattern frame entirely; small fits keep the one
         union+groupBy plan (the extra value-cube jobs would cost more
         scheduling than they save). '1'/'force' = always (parity tests),
-        '0' = never. Blocked comparisons always use the classic engine
-        (the value-level collapse would need per-block value histograms)."""
+        '0' (or false/no/off) = never. Blocked comparisons always use the
+        classic engine (the value-level collapse would need per-block value
+        histograms)."""
         mode = os.environ.get("FAST_ER_ANALYTIC_SINGLES", "auto")
-        if mode == "0" or self.blocking_a is not None or self.k_fuzzy < 1:
+        if flag_off(mode) or self.blocking_a is not None or self.k_fuzzy < 1:
             return False
         if mode in ("1", "force"):
             return True

@@ -26,7 +26,6 @@ band are rare).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 import pandas as pd
@@ -203,10 +202,7 @@ def default_value_candidates(
         # computed ONCE per distinct value here, pre-cross, and rides the
         # cross join as one long per side — the bound filter above the
         # cross then rejects most pairs before the JW kernel ever runs
-        mask_min = int(
-            os.environ.get("FAST_ER_JW_MASK_MIN_PAIRS", MASK_MIN_PAIRS)
-        )
-        if mask_col is not None and na * nb >= mask_min:
+        if mask_col is not None and na * nb >= MASK_MIN_PAIRS:
             vals_a = vals_a.withColumn("__ma", mask_col(F.col("val_a")))
             vals_b = vals_b.withColumn("__mb", mask_col(F.col("val_b")))
         # broadcast whichever side is SMALLER: the budget bounds na*nb, not
@@ -260,19 +256,13 @@ def scored_value_pairs(
     # At the defaults (p=0.1, lower=0.88): random name pairs share <1 mask
     # bit while the bound demands ~0.7*len matches, so the overwhelming
     # majority of cross-product candidates never reach the kernel.
-    # FAST_ER_JW_MASK=0 disables (A/B escape hatch); below MASK_MIN_PAIRS
-    # implied pairs default_value_candidates skips it anyway (fixed plan
-    # overhead exceeds the whole unpruned kernel cost there).
+    # Below MASK_MIN_PAIRS implied pairs default_value_candidates skips it
+    # (fixed plan overhead exceeds the whole unpruned kernel cost there).
     mask_coef = 0.0
     if 4 * p < 1:
         mask_coef = 3 * ((lower - 4 * p) / (1 - 4 * p)) - 1
-    use_mask = (
-        mask_coef > 0
-        and candidates is None
-        and os.environ.get("FAST_ER_JW_MASK", "1") != "0"
-    )
     mask_fn = None
-    if use_mask:
+    if mask_coef > 0 and candidates is None:
         if use_jvm:
             from ..functions.jvm_sketch import char_mask_jvm
 
@@ -333,30 +323,20 @@ def scored_value_pairs(
             >= F.lit(mask_coef - 1e-9) * la.cast("double") * lb.cast("double")
         ).drop("__ma", "__mb")
     if use_jvm:
-        from ..functions.jvm_sketch import jw_level_jvm, jw_level_jvm_bin
+        from ..functions.jvm_sketch import jw_level_jvm_bin
 
-        if os.environ.get("FAST_ER_JW_BIN", "1") != "0":
-            # score BINARY columns: Spark's string->binary cast is the
-            # UTF-8 bytes (exactly what the kernel hashes), and BinaryType
-            # crosses the Java-UDF bridge as byte[] with no conversion —
-            # the String form pays a UTF-16 decode in the bridge plus a
-            # UTF-8 re-encode in the kernel, two transcodes + two
-            # allocations per scored pair (~1.3e9 pairs at 100k x 100k).
-            # FAST_ER_JW_BIN=0 keeps the String kernel for A/B.
-            return (
-                cand.withColumn(
-                    "level",
-                    jw_level_jvm_bin(
-                        F.col("val_a").cast("binary"),
-                        F.col("val_b").cast("binary"),
-                        p, lower, upper,
-                    ),
-                )
-                .where(F.col("level") > 0)
-                .select("val_a", "val_b", "level")
-            )
+        # score BINARY columns: Spark's string->binary cast is the UTF-8
+        # bytes (exactly what the kernel hashes), and BinaryType crosses the
+        # Java-UDF bridge as byte[] with no transcoding (PERF.md round 5 #9).
         return (
-            cand.withColumn("level", jw_level_jvm("val_a", "val_b", p, lower, upper))
+            cand.withColumn(
+                "level",
+                jw_level_jvm_bin(
+                    F.col("val_a").cast("binary"),
+                    F.col("val_b").cast("binary"),
+                    p, lower, upper,
+                ),
+            )
             .where(F.col("level") > 0)
             .select("val_a", "val_b", "level")
         )

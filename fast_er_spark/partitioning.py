@@ -18,6 +18,8 @@ import os
 
 from pyspark.sql import DataFrame
 
+from ._env import flag_off
+
 __all__ = ["ensure_min_parallelism"]
 
 
@@ -38,10 +40,10 @@ def ensure_min_parallelism(
     stage; the checkpoint is an optimizer barrier that pins the filter above
     the spread (a handful of small-input rows is all it ever materializes).
 
-    ``FAST_ER_MIN_PARALLELISM=0`` disables the guard everywhere (A/B escape
-    hatch; also the right setting for a deployment whose inputs are always
-    well-split)."""
-    if os.environ.get("FAST_ER_MIN_PARALLELISM", "1") == "0":
+    ``FAST_ER_MIN_PARALLELISM=0`` (or false/no/off) disables the guard
+    everywhere (A/B escape hatch; also the right setting for a deployment
+    whose inputs are always well-split)."""
+    if flag_off(os.environ.get("FAST_ER_MIN_PARALLELISM")):
         return df
     if min_parts is None:
         min_parts = df.sparkSession.sparkContext.defaultParallelism

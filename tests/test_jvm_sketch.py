@@ -110,12 +110,14 @@ def test_estimator_unbiased_vs_true_jaccard(spark, jvm):
 
 
 def test_jw_level_jvm_parity_with_scalar_reference(spark, jvm):
-    """The JVM banded JW level must agree with the Python scalar reference
-    kernel on every pair — ASCII, unicode (per-UTF-8-byte semantics), empty,
-    1-char window quirk, NUL-bearing, long strings."""
+    """The JVM banded JW level (binary kernel) must agree with the Python
+    scalar reference kernel on every pair — ASCII, unicode (per-UTF-8-byte
+    semantics), empty, 1-char window quirk, NUL-bearing, long strings."""
     import random
 
-    from fast_er_spark.functions.jvm_sketch import jw_level_jvm
+    from pyspark.sql import functions as F
+
+    from fast_er_spark.functions.jvm_sketch import jw_level_jvm_bin
     from fast_er_spark.functions.jw import discretize, jaro_winkler_bytes
 
     rng = random.Random(31)
@@ -124,8 +126,7 @@ def test_jw_level_jvm_parity_with_scalar_reference(spark, jvm):
              ("dwayne", "duane"), ("a\x00b", "ab"), ("ab\x00", "ab"),
              ("école", "ecole"), ("中文", "中文x"),
              # >64-byte sides exercise the boolean[] fallback (the <=64
-             # bitmask fast path and the binary-signature UDF must agree
-             # with it at the crossover)
+             # bitmask fast path must agree with it at the crossover)
              ("ab" * 40, "ab" * 40), ("ab" * 40, "ba" * 40),
              ("x" * 63 + "yz", "x" * 65), ("q" * 64, "q" * 64 + "r")]
     for _ in range(400):
@@ -137,25 +138,21 @@ def test_jw_level_jvm_parity_with_scalar_reference(spark, jvm):
     df = spark.createDataFrame(
         [(i, a, b) for i, (a, b) in enumerate(cases)], "i long, a string, b string"
     )
-    from fast_er_spark.functions.jvm_sketch import jw_level_jvm_bin
-    from pyspark.sql import functions as F
-
     got = {
-        r["i"]: (r["lvl"], r["lvl_bin"])
+        r["i"]: r["lvl"]
         for r in df.select(
             "i",
-            jw_level_jvm("a", "b", 0.1, 0.88, 0.94).alias("lvl"),
             jw_level_jvm_bin(
                 F.col("a").cast("binary"), F.col("b").cast("binary"),
                 0.1, 0.88, 0.94,
-            ).alias("lvl_bin"),
+            ).alias("lvl"),
         ).collect()
     }
     for i, (a, b) in enumerate(cases):
         want = discretize(
             jaro_winkler_bytes(a.encode("utf-8"), b.encode("utf-8"), 0.1), 0.88, 0.94
         )
-        assert got[i] == (want, want), (a, b, got[i], want)
+        assert got[i] == want, (a, b, got[i], want)
 
 
 def test_substring_anchors_jvm_alignment_invariant(spark, jvm):
@@ -427,6 +424,7 @@ def test_scored_value_pairs_mask_filter_invariant(spark, jvm, monkeypatch):
     the JVM and the Python engines."""
     import random
 
+    from fast_er_spark.operators import agreement
     from fast_er_spark.operators.agreement import scored_value_pairs
 
     rng = random.Random(21)
@@ -444,12 +442,11 @@ def test_scored_value_pairs_mask_filter_invariant(spark, jvm, monkeypatch):
             for r in scored_value_pairs(va, vb, 0.1, 0.88, 0.94, engine=engine).collect()
         }
 
-    monkeypatch.setenv("FAST_ER_JW_MASK", "1")
-    # force past the small-pair volume gate (MASK_MIN_PAIRS) so the filter
-    # actually runs on this ~62k-pair fixture
-    monkeypatch.setenv("FAST_ER_JW_MASK_MIN_PAIRS", "0")
+    # a zero volume gate (MASK_MIN_PAIRS) forces the filter on for this
+    # ~62k-pair fixture; a gate above its pair count forces it off
+    monkeypatch.setattr(agreement, "MASK_MIN_PAIRS", 0)
     on_jvm, on_py = run("jvm"), run("python")
-    monkeypatch.setenv("FAST_ER_JW_MASK", "0")
+    monkeypatch.setattr(agreement, "MASK_MIN_PAIRS", len(names) ** 2 + 1)
     off = run("jvm")
     assert on_jvm == off and on_py == off
     assert off  # non-degenerate fixture
@@ -460,6 +457,7 @@ def test_char_mask_volume_gate(spark, jvm, monkeypatch):
     clears MASK_MIN_PAIRS: at small volumes its fixed plan overhead exceeds
     the whole unpruned kernel cost (measured +0.35 s on the sf0.1 supplier
     dedup, PERF.md round 5), so default_value_candidates skips it."""
+    from fast_er_spark.operators import agreement
     from fast_er_spark.operators.agreement import scored_value_pairs
 
     va = spark.createDataFrame([(f"nm{i}",) for i in range(40)], "val_a string")
@@ -468,13 +466,11 @@ def test_char_mask_volume_gate(spark, jvm, monkeypatch):
     def plan(df):
         return df._jdf.queryExecution().optimizedPlan().toString()
 
-    monkeypatch.setenv("FAST_ER_JW_MASK", "1")
-    monkeypatch.delenv("FAST_ER_JW_MASK_MIN_PAIRS", raising=False)
     # 1,600 implied pairs < MASK_MIN_PAIRS: gate skips the mask
     gated = scored_value_pairs(va, vb, 0.1, 0.88, 0.94, engine="jvm")
     assert "__ma" not in plan(gated)
     # forcing the threshold to 0 re-enables it on the same frames
-    monkeypatch.setenv("FAST_ER_JW_MASK_MIN_PAIRS", "0")
+    monkeypatch.setattr(agreement, "MASK_MIN_PAIRS", 0)
     forced = scored_value_pairs(va, vb, 0.1, 0.88, 0.94, engine="jvm")
     assert "__ma" in plan(forced)
 
