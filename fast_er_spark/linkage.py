@@ -18,6 +18,12 @@ Here the same flow is::
 
 with pandas inputs replaced by Spark DataFrames and the pattern index sets
 replaced by one (id_a, id_b, pattern_id) DataFrame.
+
+Deduplication is the same engine over the triangle universe: a Comparison
+of one table with itself restricted to pairs id_a > id_b, overriding only
+the pair-universe hooks (pair-space size, complement total, fuzzy and exact
+edges, exact joint counts). ``Linkage(None, None, dedup, ksi)`` works as
+for a Comparison.
 """
 
 from __future__ import annotations
@@ -27,6 +33,7 @@ import os
 import shutil
 import tempfile
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -36,18 +43,15 @@ from ._env import flag_off
 from .estimation import Estimation
 from .operators.agreement import (
     assemble_patterns,
-    char_lsh_value_candidates,
     exact_levels_dedup,
     exact_levels_linkage,
-    fuzzy_levels_dedup,
-    fuzzy_levels_linkage,
     fuzzy_value_parts_dedup,
     fuzzy_value_parts_linkage,
     join_back_dedup,
     join_back_linkage,
     pattern_counts,
 )
-from .patterns import counts_with_complement, n_patterns, strides
+from .patterns import counts_with_complement, exact_pattern_counts, n_patterns, strides
 
 __all__ = ["Comparison", "Deduplication", "Linkage", "Estimation"]
 
@@ -177,6 +181,45 @@ def _batched_distinct_counts(df: DataFrame, cols: list[str]) -> list[int]:
         ]
     ).collect()[0]
     return [int(row[f"c{i}"]) for i in range(len(cols))]
+
+
+def _histogram(patterns: DataFrame) -> dict[int, int]:
+    """{pattern_id: pair count} of a (id_a, id_b, pattern_id) frame."""
+    return {
+        int(r["pattern_id"]): int(r["cnt"]) for r in pattern_counts(patterns).collect()
+    }
+
+
+def _subset_cube(
+    df: DataFrame, exact_cols: list[str], vs: list[str], cnt: str, gid: str,
+    lead: tuple[str, str] | None = None,
+) -> DataFrame:
+    """Every exact-variable subset's value histogram of ``df`` in ONE CUBE
+    pass (2^k combination rows per input row, partial-aggregated
+    map-side): exact column j is renamed vs[j], ``cnt`` counts the rows and
+    ``gid`` is the grouping id. grouping_id bit order: first cube column =
+    most significant, so the v_j bits are k-1 .. 0 — the subset-mask
+    convention of patterns.exact_pattern_counts (a set bit = aggregated
+    out). Groups whose in-subset value is a real NULL are dropped (null
+    never agrees). ``lead`` = (column, alias) is a mandatory grouping
+    column (block key, fuzzy value): null leads are dropped, and so are the
+    combinations that aggregate it out."""
+    k = len(vs)
+    lead_cols = [F.col(lead[0]).cast("string").alias(lead[1])] if lead else []
+    f = df.select(
+        *lead_cols, *[F.col(c).cast("string").alias(v) for c, v in zip(exact_cols, vs)]
+    )
+    if lead:
+        f = f.where(F.col(lead[1]).isNotNull())
+    g = f.cube(*([lead[1]] if lead else []), *vs).agg(
+        F.count(F.lit(1)).alias(cnt), F.grouping_id().alias(gid)
+    )
+    if lead:
+        g = g.where(F.col(gid) < F.lit(1 << k))
+    for j, v in enumerate(vs):
+        in_subset = F.shiftright(F.col(gid), k - 1 - j).bitwiseAND(F.lit(1)) == 0
+        g = g.where(~in_subset | F.col(v).isNotNull())
+    return g
 
 
 # implied |A| x |B| pair space above which the materialized pattern frame is
@@ -378,7 +421,18 @@ def _sparse_fuzzy_union(
 
 
 class Comparison:
-    """A x B agreement patterns (reference Comparison, comparison.py:602)."""
+    """A x B agreement patterns (reference Comparison, comparison.py:602).
+
+    The one pattern engine: the pair universe is the only decision that
+    differs between linkage and deduplication, and it lives in the methods
+    marked "universe hook" (Deduplication overrides exactly those for the
+    strict lower triangle)."""
+
+    # universe hook: the analytic-singles engine's value-level joint counts
+    # join two per-side value cubes through the value-pair frame (sum of
+    # nA*nB) — a rectangle-only formula, so the triangle keeps the classic
+    # engine
+    _analytic_universe = True
 
     def __init__(
         self,
@@ -405,8 +459,7 @@ class Comparison:
         for c in vars_fuzzy_b + vars_exact_b:
             if c not in df_b.columns:
                 raise ValueError(f"column {c} not in df_b")
-        self.df_a, self._n_a = _with_row_id(df_a, id_a)
-        self.df_b, self._n_b = _with_row_id(df_b, id_b)
+        self._bind_frames(df_a, df_b, id_a, id_b)
         self.id_a = id_a
         self.id_b = id_b
         self.blocking_a = blocking_a
@@ -422,15 +475,130 @@ class Comparison:
         self.k_exact = len(vars_exact_a)
         self.patterns: DataFrame | None = None
         self._counts: np.ndarray | None = None
+        self._big_cached: bool | None = None
         self._sparse: DataFrame | None = None
         self._sparse_materialized = False
         self._pack_bits = None
         self._ab: tuple[DataFrame, DataFrame] | None = None
         # analytic-singles engine state (see _analytic/_fit_sparse)
-        self._parts: list[tuple[DataFrame, DataFrame, DataFrame]] | None = None
+        self._parts: list[tuple[DataFrame, ...]] | None = None
         self._multi: DataFrame | None = None
         self._multi_materialized = False
 
+    # ------------------------------------------------------ universe hooks
+    def _bind_frames(self, df_a: DataFrame, df_b: DataFrame, id_a, id_b) -> None:
+        """Universe hook: both sides' frames with stable row ids (and the
+        row counts the positional path ships for free)."""
+        self.df_a, self._n_a = _with_row_id(df_a, id_a)
+        self.df_b, self._n_b = _with_row_id(df_b, id_b)
+
+    def _row_counts(self) -> tuple[int, int]:
+        """Universe hook: (|A|, |B|). Positional row counts are free; the
+        natural-key path pays the two count jobs ONCE, overlapped, and
+        BACKFILLS _n_a/_n_b so the size gate and counts()'s complement share
+        them (four serial count jobs measured +0.25 s per fit at bench
+        scale). Safe to backfill: the packed-key gates additionally require
+        id_a/id_b is None (positional ids), so a row COUNT can never be
+        mistaken for an id BOUND."""
+        if self._n_a is None or self._n_b is None:
+            with ThreadPoolExecutor(2) as ex:
+                fa = ex.submit(self.df_a.count) if self._n_a is None else None
+                fb = ex.submit(self.df_b.count) if self._n_b is None else None
+                if fa is not None:
+                    self._n_a = fa.result()
+                if fb is not None:
+                    self._n_b = fb.result()
+        return self._n_a, self._n_b
+
+    def _pair_space(self) -> int:
+        """Universe hook: the number of candidate pairs, |A| * |B|."""
+        n_a, n_b = self._row_counts()
+        return n_a * n_b
+
+    def _complement(self, observed: dict[int, int]) -> np.ndarray:
+        """Universe hook: the full histogram, pattern 0 = every pair of the
+        universe that no observed pattern holds. Blocked universe: sum over
+        blocks of |A_b| * |B_b| (the reference's blocking sums per-block
+        Counts, usage.rst)."""
+        if self.blocking_a is None:
+            n_a, n_b = self._row_counts()
+        else:
+            ca = self.df_a.groupBy("__block").count().withColumnsRenamed({"count": "na"})
+            cb = self.df_b.groupBy("__block").count().withColumnsRenamed({"count": "nb"})
+            row = ca.join(cb, "__block").select(
+                F.sum(F.col("na") * F.col("nb")).alias("t")
+            ).collect()[0]
+            n_a, n_b = int(row["t"] or 0), 1  # the blocked total as one factor
+        return counts_with_complement(observed, self.k_fuzzy, self.k_exact, n_a, n_b)
+
+    def _distinct_sizes(self, a: DataFrame, b: DataFrame) -> list[tuple[int, int]]:
+        """Universe hook: (distinct A values, distinct B values) per fuzzy
+        variable. ALL variables' counts come from ONE aggregation job per
+        side (2 jobs total): default_value_candidates otherwise runs two
+        count jobs per fuzzy variable just to pick cross-vs-LSH and size the
+        JW stage (~5 s of driver-side latency at 4 variables). The A- and
+        B-side jobs are independent: submit them from two threads so the
+        scheduler overlaps them on idle cores (wall ~= max of the two
+        instead of their sum)."""
+        with ThreadPoolExecutor(2) as ex:
+            fa = ex.submit(_batched_distinct_counts, a, self.vars_fuzzy_a)
+            fb = ex.submit(_batched_distinct_counts, b, self.vars_fuzzy_b)
+            return list(zip(fa.result(), fb.result()))
+
+    def _value_parts(self, a, b, i: int, p, lower_thr, upper_thr, candidates, sizes) -> tuple:
+        """Universe hook: (matched value pairs, *row projections) for fuzzy
+        variable i — the frames _join_back turns into (id_a, id_b, level)
+        edges."""
+        return fuzzy_value_parts_linkage(
+            a, b, self.vars_fuzzy_a[i], self.vars_fuzzy_b[i], "id_a", "id_b",
+            p, lower_thr, upper_thr, candidates,
+            block=self.blocking_a is not None, sizes=sizes,
+        )
+
+    def _join_back(self, parts: tuple) -> DataFrame:
+        """Universe hook: (id_a, id_b, level) edges from _value_parts."""
+        return join_back_linkage(*parts, "id_a", "id_b", self.blocking_a is not None)
+
+    def _exact_edges(self, a: DataFrame, b: DataFrame, i: int) -> DataFrame:
+        """Universe hook: (id_a, id_b, 1) for pairs agreeing on exact
+        variable i."""
+        return exact_levels_linkage(
+            a, b, self.vars_exact_a[i], self.vars_exact_b[i], "id_a", "id_b",
+            block=self.blocking_a is not None,
+        )
+
+    def _exact_superset_counts(self) -> dict[int, int]:
+        """Universe hook: {S: N>=(S)} for every non-empty subset S of exact
+        variables, N>=(S) = sum over joint non-null values of cntA*cntB
+        (pairs agreeing on at least S). ONE Spark job: each side aggregates
+        every subset's value histogram in a single CUBE pass (2^k
+        combination rows per input row, partial-aggregated map-side), the
+        two cubes join null-safe per subset, and one collect returns all
+        N>=(S). The old per-subset loop ran 2^k - 1 serial scan+collect
+        jobs. Blocked comparisons add the block key to the joint grouping
+        (pairs only exist within a block)."""
+        a, b = self._ab
+        blk = self.blocking_a is not None
+        k = self.k_exact
+        vs = [f"v{j}" for j in range(k)]
+        cube_cols = (["__block"] if blk else []) + vs
+        lead = ("__block", "__block") if blk else None
+        ga = _subset_cube(a, self.vars_exact_a, vs, "na", "gid", lead)
+        gb = _subset_cube(b, self.vars_exact_b, vs, "nb", "gid", lead)
+        cond = ga["gid"] == gb["gid"]
+        for v in cube_cols:
+            # null-safe: aggregated-out columns are NULL on both sides
+            cond = cond & ga[v].eqNullSafe(gb[v])
+        joint = (
+            ga.join(gb, cond)
+            .groupBy(ga["gid"])
+            .agg(F.sum(ga["na"] * gb["nb"]).alias("t"))
+            .collect()
+        )
+        full = (1 << k) - 1
+        return {full ^ int(r["gid"]): int(r["t"]) for r in joint if int(r["gid"]) != full}
+
+    # ---------------------------------------------------------- the engine
     def _analytic(self) -> bool:
         """Analytic-singles counts engine gate. 'auto' (default): on for
         BIG pair spaces, where single-agreement pairs dominate the
@@ -440,9 +608,12 @@ class Comparison:
         scheduling than they save). '1'/'force' = always (parity tests),
         '0' (or false/no/off) = never. Blocked comparisons always use the
         classic engine (the value-level collapse would need per-block value
-        histograms)."""
+        histograms), and so does the triangle (_analytic_universe)."""
         mode = os.environ.get("FAST_ER_ANALYTIC_SINGLES", "auto")
-        if flag_off(mode) or self.blocking_a is not None or self.k_fuzzy < 1:
+        if (
+            flag_off(mode) or not self._analytic_universe
+            or self.blocking_a is not None or self.k_fuzzy < 1
+        ):
             return False
         if mode in ("1", "force"):
             return True
@@ -450,26 +621,9 @@ class Comparison:
 
     def _big(self) -> bool:
         """Pair space >= _SPILL_PAIR_SPACE -> parquet spill + pre-partitioned
-        assembly. Positional row counts are free; the natural-key path pays
-        two count jobs once (cached — trivial next to the fit itself)."""
-        if getattr(self, "_big_cached", None) is None:
-            if self._n_a is None or self._n_b is None:
-                # natural-key path: pay the two count jobs ONCE, overlapped,
-                # and BACKFILL _n_a/_n_b so counts()'s complement reuses them
-                # (four serial count jobs measured +0.25 s per fit at bench
-                # scale). Safe to backfill: the packed-key gates additionally
-                # require id_a/id_b/id_col is None (positional ids), so a
-                # row COUNT can never be mistaken for an id BOUND here.
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(2) as ex:
-                    fa = ex.submit(self.df_a.count) if self._n_a is None else None
-                    fb = ex.submit(self.df_b.count) if self._n_b is None else None
-                    if fa is not None:
-                        self._n_a = fa.result()
-                    if fb is not None:
-                        self._n_b = fb.result()
-            self._big_cached = self._n_a * self._n_b >= _SPILL_PAIR_SPACE
+        assembly (cached; see _row_counts for what the sizes cost)."""
+        if self._big_cached is None:
+            self._big_cached = self._pair_space() >= _SPILL_PAIR_SPACE
         return self._big_cached
 
     def fit(
@@ -491,8 +645,7 @@ class Comparison:
         Set False (or use blocking) for the dense reference-shaped path."""
         if self.patterns is not None:
             raise RuntimeError("already fitted")
-        blk = self.blocking_a is not None
-        bl = ["__block"] if blk else []
+        bl = ["__block"] if self.blocking_a is not None else []
         a = self.df_a.select(
             F.col(_ROW_ID).alias("id_a"), *self.vars_fuzzy_a, *self.vars_exact_a, *bl
         )
@@ -500,31 +653,15 @@ class Comparison:
             F.col(_ROW_ID).alias("id_b"), *self.vars_fuzzy_b, *self.vars_exact_b, *bl
         )
         self._ab = (a, b)
-        # ALL variables' distinct-value counts in ONE aggregation job per
-        # side (2 jobs total): default_value_candidates otherwise runs two
-        # count jobs per fuzzy variable just to pick cross-vs-LSH and size
-        # the JW stage (~5 s of driver-side latency at 4 variables)
-        sizes_ab = None
-        if self.k_fuzzy and candidates is None:
-            # the A- and B-side count jobs are independent: submit them from
-            # two threads so the scheduler overlaps them on idle cores (wall
-            # ~= max of the two instead of their sum)
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(2) as ex:
-                fa = ex.submit(_batched_distinct_counts, a, self.vars_fuzzy_a)
-                fb = ex.submit(_batched_distinct_counts, b, self.vars_fuzzy_b)
-                da, db = fa.result(), fb.result()
-            sizes_ab = list(zip(da, db))
+        sizes = self._distinct_sizes(a, b) if self.k_fuzzy and candidates is None else None
         sparse_path = exact_sparse and self.k_fuzzy >= 1 and 1 <= self.k_exact <= 8
         analytic = sparse_path and self._analytic()
         fuzzy_frames = []
         parts = []
-        for i, (ca, cb) in enumerate(zip(self.vars_fuzzy_a, self.vars_fuzzy_b)):
-            matched, rows_a, rows_b = fuzzy_value_parts_linkage(
-                a, b, ca, cb, "id_a", "id_b", p, lower_thr, upper_thr,
-                candidates, block=blk,
-                sizes=sizes_ab[i] if sizes_ab else None,
+        for i in range(self.k_fuzzy):
+            matched, *rows = self._value_parts(
+                a, b, i, p, lower_thr, upper_thr, candidates,
+                sizes[i] if sizes else None,
             )
             if analytic:
                 # the value-pair frame feeds BOTH the assembly join-back
@@ -533,10 +670,8 @@ class Comparison:
                 # frame is distinct value pairs — orders of magnitude
                 # smaller than the pair frame it implies)
                 matched = matched.persist()
-            parts.append((matched, rows_a, rows_b))
-            fuzzy_frames.append(
-                join_back_linkage(matched, rows_a, rows_b, "id_a", "id_b", blk)
-            )
+            parts.append((matched, *rows))
+            fuzzy_frames.append(self._join_back(parts[-1]))
         self._parts = parts if analytic else None
         # sparse-engine guard: the analytical exact counts CUBE expands 2^k
         # combination rows per input row — past ~8 exact variables the dense
@@ -544,11 +679,7 @@ class Comparison:
         if sparse_path:
             self._fit_sparse(a, b, fuzzy_frames)
             return self
-        frames = list(fuzzy_frames)
-        for ca, cb in zip(self.vars_exact_a, self.vars_exact_b):
-            frames.append(
-                exact_levels_linkage(a, b, ca, cb, "id_a", "id_b", block=blk)
-            )
+        frames = fuzzy_frames + [self._exact_edges(a, b, i) for i in range(self.k_exact)]
         # materialize on first action: counts() and Linkage.transform both
         # consume patterns, and without a shared materialization the whole
         # JW/join DAG re-executes per consumer (measured ~2x wall on the
@@ -666,26 +797,10 @@ class Comparison:
             # per-side column SUFFIXES (not DataFrame-attribute references):
             # self-linkage passes the same frame as both sides, where
             # attribute-id disambiguation of identical plans is unreliable
-            vs = [f"__v{j}{sfx}" for j in range(k)]
-            f = df.select(
-                F.col(fuzzy_col).cast("string").alias(f"__val{sfx}"),
-                *[F.col(c).cast("string").alias(v) for c, v in zip(exact_cols, vs)],
-            ).where(F.col(f"__val{sfx}").isNotNull())
-            g = f.cube(f"__val{sfx}", *vs).agg(
-                F.count(F.lit(1)).alias(f"__n{sfx}"),
-                F.grouping_id().alias(f"__gid{sfx}"),
+            return _subset_cube(
+                df, exact_cols, [f"__v{j}{sfx}" for j in range(k)],
+                f"__n{sfx}", f"__gid{sfx}", lead=(fuzzy_col, f"__val{sfx}"),
             )
-            # __val is the first cube column = most significant grouping bit:
-            # keep only combinations where it is NOT aggregated out. A v_j
-            # inside the subset must be a real value (null never agrees).
-            g = g.where(F.col(f"__gid{sfx}") < F.lit(1 << k))
-            for j, v in enumerate(vs):
-                in_subset = (
-                    F.shiftright(F.col(f"__gid{sfx}"), k - 1 - j).bitwiseAND(F.lit(1))
-                    == 0
-                )
-                g = g.where(~in_subset | F.col(v).isNotNull())
-            return g
 
         frames = []
         for i in range(self.k_fuzzy):
@@ -719,23 +834,17 @@ class Comparison:
         n_ge: dict[tuple[int, int], dict[int, int]] = {}
         for r in rows:
             key = (int(r["var"]), int(r["level"]))
-            # subset-mask convention matches _exact_joint_counts: exact
+            # subset-mask convention matches _exact_superset_counts: exact
             # variable j <-> bit (k-1-j), i.e. the mask IS the exact part of
             # the pattern id. gid == full (all v_j aggregated out) is the
             # S = {} row: total pairs at (var, level) regardless of exacts.
             n_ge.setdefault(key, {})[full ^ int(r["gid"])] = int(r["t"])
-        out: dict[tuple[int, int, int], int] = {}
-        for (i, lvl), ge in n_ge.items():
-            for e in range(1 << k):
-                total = 0
-                for t in range(1 << k):
-                    if (t & e) == e:  # t is a superset of e
-                        total += (-1) ** (
-                            bin(t).count("1") - bin(e).count("1")
-                        ) * ge.get(t, 0)
-                if total:
-                    out[(i, lvl, e)] = total
-        return out
+        return {
+            (i, lvl, e): total
+            for (i, lvl), ge in n_ge.items()
+            for e, total in exact_pattern_counts(ge, k).items()
+            if total
+        }
 
     def _single_pairs_batch(self, pids: list[int]) -> DataFrame:
         """(id_a, id_b, pattern_id) for admitted SINGLE-fuzzy-agreement
@@ -759,10 +868,9 @@ class Comparison:
         frames = []
         for i, entries in sorted(by_var.items()):
             lvls = sorted({l for l, _ in entries})
-            matched, rows_a, rows_b = self._parts[i]
-            edges = join_back_linkage(
-                matched.where(F.col("level").isin([int(x) for x in lvls])),
-                rows_a, rows_b, "id_a", "id_b", False,
+            matched, *rows = self._parts[i]
+            edges = self._join_back(
+                (matched.where(F.col("level").isin([int(x) for x in lvls])), *rows)
             )
             cand = edges.join(multi, ["id_a", "id_b"], "left_anti").select(
                 "id_a", "id_b",
@@ -784,13 +892,12 @@ class Comparison:
         materializing; built on demand (API parity / admitted exact-only
         patterns)."""
         a, b = self._ab
-        blk = self.blocking_a is not None
         st = strides(self.k_fuzzy, self.k_exact)
         frames = [
-            exact_levels_linkage(a, b, ca, cb, "id_a", "id_b", block=blk).select(
+            self._exact_edges(a, b, i).select(
                 "id_a", "id_b", (F.col("level") * F.lit(st[self.k_fuzzy + i])).alias("contrib")
             )
-            for i, (ca, cb) in enumerate(zip(self.vars_exact_a, self.vars_exact_b))
+            for i in range(self.k_exact)
         ]
         u = frames[0]
         for f in frames[1:]:
@@ -803,71 +910,14 @@ class Comparison:
         )
 
     def _exact_joint_counts(self) -> dict[int, int]:
-        """Exact-pattern histogram over ALL pairs, computed WITHOUT pair
-        materialization: for every non-empty subset S of exact variables,
-        N>=(S) = sum over joint non-null values of cntA*cntB (pairs agreeing
-        on at least S), then Moebius inversion gives pairs agreeing on
-        exactly the subset e. ONE Spark job: each side aggregates every
-        subset's value histogram in a single CUBE pass (2^k combination rows
-        per input row, partial-aggregated map-side), the two cubes join
-        null-safe per subset, and one collect returns all N>=(S). The old
-        per-subset loop ran 2^k - 1 serial scan+collect jobs. Blocked
-        comparisons add the block key to the joint grouping (pairs only
-        exist within a block)."""
-        a, b = self._ab
-        blk = self.blocking_a is not None
-        k = self.k_exact
-        if k == 0:
+        """Exact-pattern histogram over ALL pairs of the universe, computed
+        WITHOUT pair materialization: N>=(S) per non-empty exact subset S in
+        one Spark job (_exact_superset_counts), then Moebius inversion gives
+        the pairs agreeing on exactly each non-empty subset e."""
+        if self.k_exact == 0:
             return {}
-        vs = [f"v{j}" for j in range(k)]
-        cube_cols = (["__block"] if blk else []) + vs
-
-        def side_cube(df: DataFrame, cols: list[str], cnt: str) -> DataFrame:
-            f = df.select(
-                *(["__block"] if blk else []),
-                *[F.col(c).cast("string").alias(v) for c, v in zip(cols, vs)],
-            )
-            if blk:
-                f = f.where(F.col("__block").isNotNull())
-            g = f.cube(*cube_cols).agg(
-                F.count(F.lit(1)).alias(cnt), F.grouping_id().alias("gid")
-            )
-            # keep only combinations where __block is NOT aggregated out
-            # (grouping_id bit order: first cube column = most significant,
-            # so the block bit is bit k and the v_j bits are k-1 .. 0,
-            # matching the subset-mask convention); drop groups whose
-            # in-subset value is a real NULL (null never agrees)
-            if blk:
-                g = g.where(F.col("gid") < F.lit(1 << k))
-            for j, v in enumerate(vs):
-                in_subset = F.shiftright(F.col("gid"), k - 1 - j).bitwiseAND(F.lit(1)) == 0
-                g = g.where(~in_subset | F.col(v).isNotNull())
-            return g
-
-        ga = side_cube(a, self.vars_exact_a, "na")
-        gb = side_cube(b, self.vars_exact_b, "nb")
-        cond = ga["gid"] == gb["gid"]
-        for v in cube_cols:
-            # null-safe: aggregated-out columns are NULL on both sides
-            cond = cond & ga[v].eqNullSafe(gb[v])
-        joint = (
-            ga.join(gb, cond)
-            .groupBy(ga["gid"])
-            .agg(F.sum(ga["na"] * gb["nb"]).alias("t"))
-            .collect()
-        )
-        full = (1 << k) - 1
-        n_ge = {full ^ int(r["gid"]): int(r["t"]) for r in joint if int(r["gid"]) != full}
-        for t in range(1, 1 << k):
-            n_ge.setdefault(t, 0)  # subsets with no joint non-null values
-        exact_counts: dict[int, int] = {}
-        for e in range(1, 2**k):
-            total = 0
-            for t in range(e, 2**k):
-                if (t & e) == e:  # t is a superset of e
-                    total += (-1) ** (bin(t).count("1") - bin(e).count("1")) * n_ge[t]
-            exact_counts[e] = total
-        return exact_counts
+        n_ge = self._exact_superset_counts()
+        return {e: c for e, c in exact_pattern_counts(n_ge, self.k_exact).items() if e}
 
     def matched_pairs(self, pids: list[int]) -> DataFrame:
         """(id_a, id_b, pattern_id) restricted to the given pattern ids —
@@ -914,132 +964,93 @@ class Comparison:
 
     def counts(self) -> np.ndarray:
         """Full pattern histogram incl. the complement row
-        (comparison.py:732-748)."""
+        (comparison.py:732-748, deduplication.py:825)."""
         if self.patterns is None:
             raise RuntimeError("fit() first")
-        if self._counts is None and self._sparse is not None:
-            # the exact-value CUBE job reads only the raw a/b frames — it is
-            # independent of the sparse materialization, so submit it from a
-            # thread and let it run CONCURRENTLY with the (much larger)
-            # histogram job instead of serially after it
-            from concurrent.futures import ThreadPoolExecutor
-
-            if self._parts is not None:
-                # analytic-singles engine: the big job shrinks to the
-                # multi-agreement frame; the single-agreement histogram is
-                # reconstructed from the value-level joint counts minus the
-                # multi frame's marginals (any pair with a second fuzzy
-                # agreement is in the multi frame, so every remaining pair
-                # at (var, level) has zeros elsewhere)
-                st = strides(self.k_fuzzy, self.k_exact)
-
-                def m_job():
-                    return {
-                        int(r["pattern_id"]): int(r["cnt"])
-                        for r in pattern_counts(self._ensure_multi()).collect()
-                    }
-
-                # submit the (dominant) multi job FIRST: driver-side plan
-                # compilation is effectively serialized across threads, so
-                # whatever compiles first starts executing first — the cube
-                # jobs then compile while the cluster is already busy
-                with ThreadPoolExecutor(3) as ex:
-                    fut_m = ex.submit(m_job)
-                    fut_exact = ex.submit(self._exact_joint_counts)
-                    fut_fuzzy = ex.submit(self._fuzzy_joint_counts)
-                    m_hist = fut_m.result()
-                    fuzzy_joint = fut_fuzzy.result()
-                    exact_joint = fut_exact.result()
-                observed = dict(m_hist)
-                ek = 1 << self.k_exact
-                m_marg: dict[tuple[int, int, int], int] = {}
-                for q, c in m_hist.items():
-                    e = q % ek
-                    for i in range(self.k_fuzzy):
-                        lvl = (q // st[i]) % 3
-                        if lvl:
-                            key = (i, lvl, e)
-                            m_marg[key] = m_marg.get(key, 0) + c
-                for (i, lvl, e), n in fuzzy_joint.items():
-                    c = n - m_marg.get((i, lvl, e), 0)
-                    if c < 0:
-                        # invariant: every multi-frame pair at (var, level,
-                        # exact) is also in the value-level joint count — a
-                        # negative remainder means the two engines disagree
-                        # and the histogram would be silently corrupted
-                        raise RuntimeError(
-                            "analytic-singles invariant violated at "
-                            f"(var={i}, level={lvl}, exact={e}): joint {n} < "
-                            f"multi marginal {m_marg.get((i, lvl, e), 0)}"
-                        )
-                    if c:
-                        pid = lvl * st[i] + e
-                        observed[pid] = observed.get(pid, 0) + c
-            else:
-                with ThreadPoolExecutor(1) as ex:
-                    fut_exact = ex.submit(self._exact_joint_counts)
-                    observed = {
-                        int(r["pattern_id"]): int(r["cnt"])
-                        for r in pattern_counts(self._ensure_sparse()).collect()
-                    }
-                    exact_joint = fut_exact.result()
-            # exact-only patterns: analytical count = (pairs whose exact
-            # agreement vector is exactly e, any fuzzy) minus (sparse pairs
-            # whose exact bits are e) — no pair materialization
-            sparse_by_e: dict[int, int] = {}
-            for pid, c in observed.items():
-                e = pid % (2**self.k_exact)
-                sparse_by_e[e] = sparse_by_e.get(e, 0) + c
-            for e, total in exact_joint.items():
-                observed[e] = total - sparse_by_e.get(e, 0)
-            if self.blocking_a is None:
-                # positional row ids ship the exact totals for free; natural
-                # keys pay the two count jobs once
-                total_a = self._n_a if self._n_a is not None else self.df_a.count()
-                total_b = self._n_b if self._n_b is not None else self.df_b.count()
-                self._counts = counts_with_complement(
-                    observed, self.k_fuzzy, self.k_exact, total_a, total_b
-                )
-            else:
-                self._counts = self._blocked_complement(observed)
         if self._counts is None:
-            observed = {
-                int(r["pattern_id"]): int(r["cnt"])
-                for r in pattern_counts(self.patterns).collect()
-            }
-            if self.blocking_a is None:
-                total_a = self._n_a if self._n_a is not None else self.df_a.count()
-                total_b = self._n_b if self._n_b is not None else self.df_b.count()
-                self._counts = counts_with_complement(
-                    observed, self.k_fuzzy, self.k_exact, total_a, total_b
-                )
-            else:
-                self._counts = self._blocked_complement(observed)
+            observed = (
+                _histogram(self.patterns) if self._sparse is None
+                else self._sparse_observed()
+            )
+            self._counts = self._complement(observed)
         return self._counts
 
-    def _blocked_complement(self, observed: dict[int, int]) -> np.ndarray:
-        """Blocked pair universe: sum over blocks |A_b| * |B_b| (the
-        reference's blocking sums per-block Counts, usage.rst)."""
-        from .patterns import n_patterns
+    def _sparse_observed(self) -> dict[int, int]:
+        """Observed histogram of the sparse-exact engine. The exact-value
+        CUBE job reads only the raw a/b frames — it is independent of the
+        sparse materialization, so it is submitted from a thread and runs
+        CONCURRENTLY with the (much larger) histogram job instead of
+        serially after it."""
+        if self._parts is not None:
+            # analytic-singles engine: the big job shrinks to the
+            # multi-agreement frame; the single-agreement histogram is
+            # reconstructed from the value-level joint counts minus the
+            # multi frame's marginals (any pair with a second fuzzy
+            # agreement is in the multi frame, so every remaining pair
+            # at (var, level) has zeros elsewhere)
+            st = strides(self.k_fuzzy, self.k_exact)
 
-        ca = self.df_a.groupBy("__block").count().withColumnsRenamed({"count": "na"})
-        cb = self.df_b.groupBy("__block").count().withColumnsRenamed({"count": "nb"})
-        row = ca.join(cb, "__block").select(
-            F.sum(F.col("na") * F.col("nb")).alias("t")
-        ).collect()[0]
-        total = int(row["t"] or 0)
-        counts = np.zeros(n_patterns(self.k_fuzzy, self.k_exact), dtype=np.int64)
+            # submit the (dominant) multi job FIRST: driver-side plan
+            # compilation is effectively serialized across threads, so
+            # whatever compiles first starts executing first — the cube
+            # jobs then compile while the cluster is already busy
+            with ThreadPoolExecutor(3) as ex:
+                fut_m = ex.submit(lambda: _histogram(self._ensure_multi()))
+                fut_exact = ex.submit(self._exact_joint_counts)
+                fut_fuzzy = ex.submit(self._fuzzy_joint_counts)
+                m_hist = fut_m.result()
+                fuzzy_joint = fut_fuzzy.result()
+                exact_joint = fut_exact.result()
+            observed = dict(m_hist)
+            ek = 1 << self.k_exact
+            m_marg: dict[tuple[int, int, int], int] = {}
+            for q, c in m_hist.items():
+                e = q % ek
+                for i in range(self.k_fuzzy):
+                    lvl = (q // st[i]) % 3
+                    if lvl:
+                        key = (i, lvl, e)
+                        m_marg[key] = m_marg.get(key, 0) + c
+            for (i, lvl, e), n in fuzzy_joint.items():
+                c = n - m_marg.get((i, lvl, e), 0)
+                if c < 0:
+                    # invariant: every multi-frame pair at (var, level,
+                    # exact) is also in the value-level joint count — a
+                    # negative remainder means the two engines disagree
+                    # and the histogram would be silently corrupted
+                    raise RuntimeError(
+                        "analytic-singles invariant violated at "
+                        f"(var={i}, level={lvl}, exact={e}): joint {n} < "
+                        f"multi marginal {m_marg.get((i, lvl, e), 0)}"
+                    )
+                if c:
+                    pid = lvl * st[i] + e
+                    observed[pid] = observed.get(pid, 0) + c
+        else:
+            with ThreadPoolExecutor(1) as ex:
+                fut_exact = ex.submit(self._exact_joint_counts)
+                observed = _histogram(self._ensure_sparse())
+                exact_joint = fut_exact.result()
+        # exact-only patterns: analytical count = (pairs whose exact
+        # agreement vector is exactly e, any fuzzy) minus (sparse pairs
+        # whose exact bits are e) — no pair materialization
+        sparse_by_e: dict[int, int] = {}
         for pid, c in observed.items():
-            if pid != 0:
-                counts[pid] = c
-        counts[0] = total - counts[1:].sum()
-        return counts
+            e = pid % (2**self.k_exact)
+            sparse_by_e[e] = sparse_by_e.get(e, 0) + c
+        for e, total in exact_joint.items():
+            observed[e] = total - sparse_by_e.get(e, 0)
+        return observed
 
 
-class Deduplication:
+class Deduplication(Comparison):
     """Within-table agreement patterns (reference Deduplication,
-    deduplication.py:716). Pair universe = strict lower triangle; the counts
+    deduplication.py:716): the Comparison engine over the strict lower
+    triangle (id_a > id_b) of one table, whose row ids are assigned once and
+    serve as both sides. Only the universe hooks differ; the counts
     complement row includes the diagonal (deduplication.py:825)."""
+
+    _analytic_universe = False
 
     def __init__(
         self,
@@ -1048,216 +1059,64 @@ class Deduplication:
         vars_exact: list[str] | None = None,
         id_col: str | None = None,
     ):
-        vars_exact = vars_exact or []
-        for c in vars_fuzzy + vars_exact:
-            if c not in df.columns:
-                raise ValueError(f"column {c} not in df")
-        self.df, self._n = _with_row_id(df, id_col)
-        self.id_col = id_col
-        self.vars_fuzzy = vars_fuzzy
-        self.vars_exact = vars_exact
-        self.k_fuzzy = len(vars_fuzzy)
-        self.k_exact = len(vars_exact)
-        self.patterns: DataFrame | None = None
-        self._counts: np.ndarray | None = None
-        self._sparse: DataFrame | None = None
-        self._sparse_materialized = False
-        self._pack_bits = None
-        self._d: DataFrame | None = None
-        # analytic-singles engine state (see Comparison._analytic)
-        self._parts: list[tuple[DataFrame, DataFrame]] | None = None
-        self._multi: DataFrame | None = None
-        self._multi_materialized = False
-
-    def _analytic(self) -> bool:
-        """OFF until the triangular analytic counts path exists: fit() used
-        to persist every matched value-pair frame and set self._parts on
-        big dedups, but no Deduplication code consumes them (counts() still
-        materializes the full sparse frame) — default-path memory and a
-        persist job with zero benefit (round-5 ADVICE). Re-enable alongside
-        a triangular _fuzzy_joint_counts/_ensure_multi implementation."""
-        return False
-
-    def _big(self) -> bool:
-        if getattr(self, "_big_cached", None) is None:
-            if self._n is None:
-                # natural-key path: count once and backfill so counts()'s
-                # complement reuses it (see Comparison._big for the safety
-                # argument — the packed-key gate requires id_col is None)
-                self._n = self.df.count()
-            self._big_cached = self._n * (self._n - 1) // 2 >= _SPILL_PAIR_SPACE
-        return self._big_cached
-
-    def fit(
-        self,
-        p: float = 0.1,
-        lower_thr: float = 0.88,
-        upper_thr: float = 0.94,
-        candidates=None,
-        exact_sparse: bool = True,
-    ) -> "Deduplication":
-        """``exact_sparse``: same sparse-exact engine as Comparison.fit, with
-        the triangular pair universe — exact-only pattern counts come from
-        sum(c*(c-1)/2) over value frequencies instead of a self-join that
-        materializes O(n^2/|values|) rows."""
-        if self.patterns is not None:
-            raise RuntimeError("already fitted")
-        d = self.df.select(F.col(_ROW_ID).alias("id"), *self.vars_fuzzy, *self.vars_exact)
-        self._d = d
-        # one aggregation job for every variable's distinct count (see
-        # Comparison.fit) — the dedup candidate universe is vals x vals
-        sizes_d = None
-        if self.k_fuzzy and candidates is None:
-            sizes_d = _batched_distinct_counts(d, self.vars_fuzzy)
-        sparse_path = exact_sparse and self.k_fuzzy >= 1 and 1 <= self.k_exact <= 8
-        fuzzy_frames = []
-        for i, c in enumerate(self.vars_fuzzy):
-            matched, rows = fuzzy_value_parts_dedup(
-                d, c, "id", p, lower_thr, upper_thr, candidates,
-                sizes=(sizes_d[i], sizes_d[i]) if sizes_d else None,
-            )
-            fuzzy_frames.append(join_back_dedup(matched, rows, "id"))
-        self._parts = None  # no dedup analytic engine yet (see _analytic)
-        # same 2^k CUBE-expansion guard as Comparison.fit
-        if sparse_path:
-            self._fit_sparse(d, fuzzy_frames)
-            return self
-        frames = list(fuzzy_frames)
-        for c in self.vars_exact:
-            frames.append(exact_levels_dedup(d, c, "id"))
-        # shared materialization for counts+transform: parquet spill when
-        # big, persist() when small (see _materialize_pairs)
-        self.patterns = _materialize_pairs(
-            assemble_patterns(frames, self.k_fuzzy, self.k_exact), self._big()
-        )
-        return self
-
-    def _fit_sparse(self, d: DataFrame, fuzzy_frames) -> None:
-        st = strides(self.k_fuzzy, self.k_exact)
-        pack = self.id_col is None and _pack_ok(self._n)
-        self._pack_bits = _single_long_bits(
-            self._n, self._n, st, self.k_fuzzy, self.k_exact
-        ) if pack else None
-        sparse = _sparse_fuzzy_union(
-            fuzzy_frames, st, self.k_fuzzy, pack,
-            prepartition=self._big(), pack_bits=self._pack_bits and self._pack_bits[0],
-        )
-        exact_expr = F.lit(0).cast("long")
-        for idx, c in enumerate(self.vars_exact):
-            s = st[self.k_fuzzy + idx]
-            va = d.select(F.col("id").alias("id_a"), F.col(c).cast("string").alias(f"__ea{idx}"))
-            vb = d.select(F.col("id").alias("id_b"), F.col(c).cast("string").alias(f"__eb{idx}"))
-            sparse = sparse.join(va, "id_a").join(vb, "id_b")
-            exact_expr = exact_expr + F.when(
-                F.col(f"__ea{idx}") == F.col(f"__eb{idx}"), F.lit(s).cast("long")
-            ).otherwise(F.lit(0).cast("long"))
-        sparse = sparse.select(
-            "id_a", "id_b", (F.col("__fz") + exact_expr).alias("pattern_id")
-        )
-        # lazy; first consumer materializes via _ensure_sparse (see
-        # Comparison._fit_sparse for the persist-vs-checkpoint rationale)
-        self._sparse = sparse
-        self.patterns = self._sparse.unionByName(self._exact_only_patterns())
-
-    def _ensure_sparse(self) -> DataFrame:
-        if not self._sparse_materialized:
-            self._sparse = _materialize_pairs(
-                self._sparse, self._big(),
-                pack_bits=self._pack_bits and self._pack_bits[1],
-            )
-            self._sparse_materialized = True
-            self.patterns = self._sparse.unionByName(self._exact_only_patterns())
-        return self._sparse
-
-    def _exact_only_patterns(self) -> DataFrame:
-        st = strides(self.k_fuzzy, self.k_exact)
-        frames = [
-            exact_levels_dedup(self._d, c, "id").select(
-                "id_a", "id_b", (F.col("level") * F.lit(st[self.k_fuzzy + i])).alias("contrib")
-            )
-            for i, c in enumerate(self.vars_exact)
-        ]
-        u = frames[0]
-        for f in frames[1:]:
-            u = u.unionByName(f)
-        allex = u.groupBy("id_a", "id_b").agg(
-            F.sum("contrib").cast("long").alias("pattern_id")
-        )
-        return allex.join(
-            self._sparse.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti"
+        super().__init__(
+            df, df, vars_fuzzy, vars_fuzzy, vars_exact, vars_exact, id_col, id_col
         )
 
-    def _exact_joint_counts(self) -> dict[int, int]:
-        """Triangular analogue of Comparison._exact_joint_counts:
-        N>=(S) = sum over joint non-null values of c*(c-1)/2. ONE Spark job:
-        a single CUBE pass aggregates every subset's value histogram, a tiny
-        second aggregation by grouping id sums c*(c-1) (exact longs, halved
-        driver-side — a double division would lose precision past 2^53
-        pairs), one collect. The old loop ran 2^k - 1 serial jobs."""
+    def _bind_frames(self, df_a: DataFrame, df_b: DataFrame, id_a, id_b) -> None:
+        self.df_a, self._n_a = _with_row_id(df_a, id_a)
+        self.df_b, self._n_b = self.df_a, self._n_a
+
+    def _row_counts(self) -> tuple[int, int]:
+        # one table: the natural-key path pays ONE count job (backfilled as
+        # in Comparison._row_counts)
+        if self._n_a is None:
+            self._n_a = self._n_b = self.df_a.count()
+        return self._n_a, self._n_b
+
+    def _pair_space(self) -> int:
+        n = self._row_counts()[0]
+        return n * (n - 1) // 2
+
+    def _complement(self, observed: dict[int, int]) -> np.ndarray:
+        # n_b=None: the reference's n*(n+1)/2 total, diagonal included
+        return counts_with_complement(
+            observed, self.k_fuzzy, self.k_exact, self._row_counts()[0], None
+        )
+
+    def _distinct_sizes(self, a: DataFrame, b: DataFrame) -> list[tuple[int, int]]:
+        # both sides are the same values: one aggregation job, and the
+        # candidate universe is vals x vals
+        return [(n, n) for n in _batched_distinct_counts(a, self.vars_fuzzy_a)]
+
+    def _value_parts(self, a, b, i: int, p, lower_thr, upper_thr, candidates, sizes) -> tuple:
+        return fuzzy_value_parts_dedup(
+            a, self.vars_fuzzy_a[i], "id_a", p, lower_thr, upper_thr, candidates,
+            sizes=sizes,
+        )
+
+    def _join_back(self, parts: tuple) -> DataFrame:
+        return join_back_dedup(*parts, "id_a")
+
+    def _exact_edges(self, a: DataFrame, b: DataFrame, i: int) -> DataFrame:
+        return exact_levels_dedup(a, self.vars_exact_a[i], "id_a")
+
+    def _exact_superset_counts(self) -> dict[int, int]:
+        """N>=(S) = sum over joint non-null values of c*(c-1)/2. ONE Spark
+        job: a single CUBE pass aggregates every subset's value histogram,
+        a tiny second aggregation by grouping id sums c*(c-1) (exact longs,
+        halved driver-side — a double division would lose precision past
+        2^53 pairs), one collect."""
         k = self.k_exact
-        if k == 0:
-            return {}
         vs = [f"v{j}" for j in range(k)]
-        f = self._d.select(
-            *[F.col(c).cast("string").alias(v) for c, v in zip(self.vars_exact, vs)]
-        )
-        g = f.cube(*vs).agg(F.count(F.lit(1)).alias("c"), F.grouping_id().alias("gid"))
-        for j, v in enumerate(vs):
-            in_subset = F.shiftright(F.col("gid"), k - 1 - j).bitwiseAND(F.lit(1)) == 0
-            g = g.where(~in_subset | F.col(v).isNotNull())
+        g = _subset_cube(self._ab[0], self.vars_exact_a, vs, "c", "gid")
         rows = (
             g.groupBy("gid")
             .agg(F.coalesce(F.sum(F.col("c") * (F.col("c") - F.lit(1))), F.lit(0)).alias("t"))
             .collect()
         )
         full = (1 << k) - 1
-        n_ge = {full ^ int(r["gid"]): int(r["t"]) // 2 for r in rows if int(r["gid"]) != full}
-        for t in range(1, 1 << k):
-            n_ge.setdefault(t, 0)
-        exact_counts: dict[int, int] = {}
-        for e in range(1, 2**k):
-            total = 0
-            for t in range(e, 2**k):
-                if (t & e) == e:
-                    total += (-1) ** (bin(t).count("1") - bin(e).count("1")) * n_ge[t]
-            exact_counts[e] = total
-        return exact_counts
-
-    def counts(self) -> np.ndarray:
-        if self.patterns is None:
-            raise RuntimeError("fit() first")
-        if self._counts is None and self._sparse is not None:
-            # overlap the (sparse-independent) exact CUBE job with the
-            # histogram job — see Comparison.counts()
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(1) as ex:
-                fut_exact = ex.submit(self._exact_joint_counts)
-                observed = {
-                    int(r["pattern_id"]): int(r["cnt"])
-                    for r in pattern_counts(self._ensure_sparse()).collect()
-                }
-                exact_joint = fut_exact.result()
-            sparse_by_e: dict[int, int] = {}
-            for pid, c in observed.items():
-                e = pid % (2**self.k_exact)
-                sparse_by_e[e] = sparse_by_e.get(e, 0) + c
-            for e, total in exact_joint.items():
-                observed[e] = total - sparse_by_e.get(e, 0)
-            self._counts = counts_with_complement(
-                observed, self.k_fuzzy, self.k_exact,
-                self._n if self._n is not None else self.df.count(), None,
-            )
-        if self._counts is None:
-            observed = {
-                int(r["pattern_id"]): int(r["cnt"])
-                for r in pattern_counts(self.patterns).collect()
-            }
-            self._counts = counts_with_complement(
-                observed, self.k_fuzzy, self.k_exact,
-                self._n if self._n is not None else self.df.count(), None,
-            )
-        return self._counts
+        return {full ^ int(r["gid"]): int(r["t"]) // 2 for r in rows if int(r["gid"]) != full}
 
 
 class Linkage:
@@ -1282,8 +1141,8 @@ class Linkage:
                 raise ValueError(f"df_{side} lacks the Comparison id column {id_col!r}")
             return _with_row_id(df, id_col)[0]
 
-        self.df_a = bind(df_a, getattr(comparison, "id_a", None), comparison.df_a, "a")
-        self.df_b = bind(df_b, getattr(comparison, "id_b", None), comparison.df_b, "b")
+        self.df_a = bind(df_a, comparison.id_a, comparison.df_a, "a")
+        self.df_b = bind(df_b, comparison.id_b, comparison.df_b, "b")
         self.patterns = comparison.patterns
         self._comparison = comparison
         self.ksi = np.asarray(ksi, dtype=np.float64)
@@ -1329,10 +1188,7 @@ class Linkage:
                 .coalesce(1)
                 .localCheckpoint(eager=True)
             )
-        if self._comparison is not None and hasattr(self._comparison, "matched_pairs"):
-            base = self._comparison.matched_pairs(admitted)
-        else:
-            base = self.patterns.where(F.col("pattern_id").isin(admitted))
+        base = self._comparison.matched_pairs(admitted)
         # join keys get throwaway names: a post-join rename of id_a would
         # case-insensitively hit a user column suffixed to id_A (a table with
         # an 'id' column) and produce two Index_A columns

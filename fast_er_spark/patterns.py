@@ -31,6 +31,7 @@ __all__ = [
     "pattern_id",
     "n_patterns",
     "counts_with_complement",
+    "exact_pattern_counts",
 ]
 
 
@@ -86,3 +87,23 @@ def counts_with_complement(
             counts[pid] = c
     counts[0] = total - counts[1:].sum()
     return counts
+
+
+def exact_pattern_counts(n_ge: dict[int, int], k_exact: int) -> dict[int, int]:
+    """Moebius inversion over the subsets of ``k_exact`` exact variables.
+
+    ``n_ge[S]`` counts the pairs agreeing on AT LEAST the exact variables in
+    subset mask S (exact variable j <-> bit k_exact-1-j, so a mask IS the
+    exact part of a pattern id); a missing S counts 0. Returns, for every
+    e in 0 .. 2^k_exact - 1, the pairs agreeing on EXACTLY e:
+    ``sum over supersets t of e of (-1)^|t - e| * n_ge[t]``.
+    """
+    full = 1 << k_exact
+    return {
+        e: sum(
+            (-1) ** bin(t ^ e).count("1") * n_ge.get(t, 0)
+            for t in range(e, full)
+            if t & e == e
+        )
+        for e in range(full)
+    }

@@ -79,6 +79,41 @@ def test_dedup_patterns_match_oracle(spark):
     assert np.array_equal(dd.counts(), want_counts)
 
 
+def test_linkage_over_dedup_uses_matched_pairs(spark):
+    """Deduplication is the Comparison engine over the triangle, so
+    matched_pairs() serves every pattern class (multi-fuzzy, single-fuzzy,
+    exact-only) and Linkage runs over a dedup fit."""
+    from fast_er_spark.linkage import Deduplication, Estimation, Linkage
+    from fast_er_spark.patterns import strides
+
+    rows_a, rows_b = people(n=30, seed=11)
+    rows = rows_a + rows_b
+    for i, r in enumerate(rows):
+        r["rid"] = i
+    df = spark.createDataFrame(rows)
+    dd = Deduplication(df, FUZZY, EXACT, id_col="rid").fit()
+    n = len(rows)
+    oracle = dedup_patterns(_tuples(rows), len(FUZZY), len(EXACT))
+    want = {pid: {(f // n, f % n) for f in flats} for pid, flats in oracle.items()}
+
+    st = strides(len(FUZZY), len(EXACT))
+    n_fuzzy = {
+        pid: sum(1 for i in range(len(FUZZY)) if (pid // st[i]) % 3) for pid in want
+    }
+    assert {min(v, 2) for v in n_fuzzy.values()} == {0, 1, 2}
+    for pid, pairs in want.items():
+        got = {(int(r.id_a), int(r.id_b)) for r in dd.matched_pairs([pid]).collect()}
+        assert got == pairs, pid
+
+    est = Estimation(len(FUZZY), len(EXACT), dd.counts(), seed=13).fit()
+    out = Linkage(None, None, dd, est.ksi).transform(0.5).collect()
+    admitted = {
+        pair for pid, pairs in want.items() if est.ksi[pid] >= 0.5 for pair in pairs
+    }
+    got = {(int(r.Index_A), int(r.Index_B)) for r in out}
+    assert admitted and got == admitted
+
+
 def test_full_fs_linkage_flow(spark):
     """Comparison -> EM -> Linkage, precision/recall vs planted ncid truth
     (the reference's own validation method, example/Example.ipynb cells 4-8)."""
@@ -405,4 +440,4 @@ def test_natural_key_row_counts_cached(spark, monkeypatch):
     monkeypatch.setattr(DataFrame, "count", lambda self: calls.append(1) or orig(self))
     dd.fit().counts()
     monkeypatch.setattr(DataFrame, "count", orig)
-    assert dd._n == len(rows_a) and len(calls) == 1
+    assert dd._n_a == len(rows_a) and len(calls) == 1

@@ -9,6 +9,7 @@ from fast_er_spark.estimation import Estimation
 from fast_er_spark.evaluation import Evaluation
 from fast_er_spark.patterns import (
     counts_with_complement,
+    exact_pattern_counts,
     gamma_matrix,
     n_patterns,
     pattern_id,
@@ -38,6 +39,22 @@ def test_counts_complements():
     # dedup: complement includes the diagonal (n(n+1)/2, deduplication.py:825)
     c = counts_with_complement({2: 4}, 1, 0, n_a=10)
     assert c.sum() == 55 and c[0] == 51
+
+
+def test_exact_pattern_counts_inverts_superset_counts():
+    """Moebius inversion: from N>=(S) (pairs agreeing on at least subset S)
+    back to the pairs agreeing on exactly each exact pattern, against
+    brute-force enumeration of random agreement vectors."""
+    rng = np.random.default_rng(5)
+    for k in range(1, 5):
+        for _ in range(20):
+            masks = rng.integers(0, 1 << k, size=int(rng.integers(0, 60)))
+            want = {e: int((masks == e).sum()) for e in range(1 << k)}
+            n_ge = {s: int(((masks & s) == s).sum()) for s in range(1 << k)}
+            assert exact_pattern_counts(n_ge, k) == want
+            # a subset with no agreeing pair may be absent (counts 0)
+            sparse = {s: n for s, n in n_ge.items() if n}
+            assert exact_pattern_counts(sparse, k) == want
 
 
 def _synthetic_counts(kf, ke, lam, pi0_hi, pi1_hi, n_pairs):
